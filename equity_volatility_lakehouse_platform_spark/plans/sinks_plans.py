@@ -1153,20 +1153,17 @@ _snk23_oracle()
 
 @register(
     "snk24_delta_format_export",
-    # Delta-FORMAT interop export (round 14 — VERDICT r13 "What's
-    # missing" #2: artifacts this engine writes could not be opened by
-    # independent engines). The cycle under test: transactional history
-    # on the bespoke ACID log (overwrite + append + a copy-on-write
-    # DELETE, so the log carries real remove actions), exported 1:1
-    # into a spec-conformant Delta table (sources/delta_compat.py —
-    # public delta.io PROTOCOL.md, data files HARD-LINKED so a 100 TB
-    # export moves zero data bytes), a parquet checkpoint +
-    # _last_checkpoint written, and the result read back THROUGH the
-    # checkpointed Delta log. The oracle restates the surviving rows
-    # from the source table directly — export, checkpoint and replay
-    # must be result-invisible. tests/test_delta_compat.py adds the
-    # foreign-engine half (DuckDB over a plain-json log replay) and
-    # per-version time-travel parity.
+    # Delta-FORMAT round trip. AcidTable's log IS the public delta.io
+    # PROTOCOL.md _delta_log, so independent engines open the table in
+    # place. The cycle under test: transactional history (overwrite +
+    # append + a copy-on-write DELETE, so the log carries real remove
+    # actions), a parquet checkpoint + _last_checkpoint written, and
+    # the table RE-OPENED as a fresh AcidTable and read back through the
+    # checkpointed log. The oracle restates the surviving rows from the
+    # source table directly — checkpoint and replay must be
+    # result-invisible. tests/test_delta_compat.py adds the
+    # foreign-engine half (DuckDB over a plain-json log replay) for
+    # every op.
     oracle=f"""
     SELECT o_orderstatus,
            CAST(count(*) AS BIGINT) AS n_orders,
@@ -1176,20 +1173,14 @@ _snk23_oracle()
     """,
 )
 def snk24_delta_format_export(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from equity_volatility_lakehouse_platform_spark.sources.delta_compat import (
-        DeltaCompatTable,
-    )
-
     orders = load_table(spark, sf_dir, "orders")
-    base = session_scratch("snk24", sf_dir)
-    acid = AcidTable(spark, base + "/orders_acid")
+    root = session_scratch("snk24", sf_dir) + "/orders_acid"
+    acid = AcidTable(spark, root)
     acid.overwrite(orders.filter(F.col("o_orderkey") % 3 != 0))
     acid.append(orders.filter(F.col("o_orderkey") % 3 == 0))
     acid.delete_where(F.col("o_orderstatus") == "F")
-    delta = DeltaCompatTable(spark, base + "/orders_delta")
-    delta.export_acid(acid)
-    delta.checkpoint()
-    back = delta.read()
+    acid.checkpoint()
+    back = AcidTable(spark, root).read()
     return back.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_orders"),
         _money("o_totalprice").alias("total_price"),

@@ -739,10 +739,10 @@ def st22_session_window_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "st23_delta_txn_ingest_stream",
-    # The OPEN-FORMAT exactly-once ingestion loop (round 14, the
-    # delta_compat twin of st12): every micro-batch lands as a blind
-    # append into the Delta-format table stamped with the protocol's
-    # txn {appId, version=batch_id}; a replayed batch (the foreachBatch
+    # The OPEN-FORMAT exactly-once ingestion loop (the txn twin of
+    # st12): every micro-batch lands as a blind AcidTable.append_txn
+    # stamped with the Delta protocol's txn {appId, version=batch_id}
+    # in the table's _delta_log; a replayed batch (the foreachBatch
     # retry race — sink committed, stream checkpoint didn't advance) is
     # skipped by the table's txn watermark, asserted inside the runner.
     # No content keys, no sink-side state: the idempotence lives in the

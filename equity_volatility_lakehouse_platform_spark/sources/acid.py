@@ -1,52 +1,57 @@
-"""Minimal ACID table format: snapshot-isolated parquet with a
-Delta-style commit log (SURVEY.md §2.1 S12; reference upsert semantics
+"""ACID table format: snapshot-isolated parquet under a Delta Lake
+transaction log (SURVEY.md §2.1 S12; reference upsert semantics
 ``data_alpaca/bars.py:196-198,424-428`` ON CONFLICT DO NOTHING, Iceberg
 CTAS/overwrite ``processing/Procesamiento_fase_1.ipynb`` cells 9/20).
 
-Delta/Iceberg aren't installable in this container, so this module
-implements the part of their design the engine actually needs — atomic
-commits, snapshot isolation, optimistic concurrency, time travel — as a
-file-system commit protocol over plain parquet:
+Delta/Iceberg packages aren't installable in this container, so this
+module implements the part of their design the engine needs — atomic
+commits, snapshot isolation, optimistic concurrency, time travel — over
+plain parquet. The log it writes IS the public Delta transaction log
+(delta-io PROTOCOL.md, reader v1 / writer v2): Spark+delta-core, Trino,
+Athena, delta-rs or DuckDB open the table in place, with no export step.
 
 Layout::
 
     table_root/
-      _commits/00000000.json     # one manifest per version
-      _commits/00000001.json
-      data/w-<uuid>/part-*.parquet   # immutable; one dir per write job
+      _delta_log/00000000000000000000.json   # one commit per version
+      _delta_log/<version>.checkpoint.parquet + _last_checkpoint
+      data/w-<uuid>/part-*.parquet           # immutable; one dir per write job
 
-* A manifest lists the RELATIVE paths of every live data file at that
-  version plus op metadata. Readers resolve the highest committed
-  version and read exactly those files — data written by in-flight or
-  crashed jobs is invisible (snapshot isolation; a crash mid-write
-  leaves only an unreferenced ``data/w-*`` dir).
-* Publishing a commit is atomic create-if-absent: the manifest is fully
-  written + fsynced to a temp name, then ``os.link``-ed to
-  ``_commits/N.json`` — hardlink creation fails if N already exists, so
-  exactly one writer wins each version (the rename-based equivalent of
-  Delta's LogStore ``putIfAbsent``; on an object store this maps to a
-  conditional PUT).
-* Losers of the race retry OPTIMISTICALLY: re-read the new snapshot,
-  recompute their change, attempt version N+1. Orphaned data dirs from
-  lost races stay unreferenced until ``vacuum()``.
-* DML is COPY-ON-WRITE at file granularity (``delete_where`` /
-  ``update_where``): only files containing matching rows are rewritten;
-  everything else carries into the new manifest by reference — the
-  Delta/Iceberg rewrite-minimality contract.
+* A commit is newline-delimited JSON actions: ``commitInfo`` (the op; a
+  partition spec as ``operationParameters.partitionBy``), ``protocol``
+  and ``metaData`` (version 0 and schema changes), ``txn`` (idempotent
+  streaming appends) and the ``add``/``remove`` diff of the live file
+  set against the parent version. ``add.stats`` holds the footer
+  ``numRecords`` and, after ZORDER, per-file ``minValues``/``maxValues``.
+  A shallow clone adds the source's files by absolute ``file://`` URI.
+  Partition specs are ordinary data columns, so ``partitionColumns`` is
+  empty; a table that declares physical partition columns is refused.
+* Readers replay the log (from the newest checkpoint) and read exactly
+  the live files of a version: data written by in-flight or crashed
+  jobs is invisible. Replay state is O(files), never O(rows).
+* Publishing is atomic create-if-absent: the commit is written + fsynced
+  to a temp name, then ``os.link``-ed to its log name — link(2) fails
+  if the version exists, so exactly one writer wins it (Delta's
+  ``putIfAbsent``; a conditional PUT on an object store). Losers retry
+  OPTIMISTICALLY against the new snapshot; their orphaned data dirs stay
+  unreferenced until ``vacuum()``.
+* DML is COPY-ON-WRITE at file granularity: only files holding matching
+  rows are rewritten, everything else carries over by reference. The
+  change feed (``changes()``) is derived from the add/remove difference;
+  no ``cdc`` files are written.
 
-Only table METADATA passes through the driver (file lists; O(files) like
-every table format) — data itself moves executor-side via ordinary
-parquet jobs, so the protocol adds no data-path driver work at 100 TB.
-The file-list read (``spark.read.parquet(*files)``) keeps predicate
-pushdown and column pruning intact; at real scale the manifest would
-also carry per-file min/max stats for file skipping (noted, not needed
-at test SF).
+``_try_commit`` (encode) and ``_replay`` (decode) are the only code that
+knows the log format; every op works on the decoded manifest
+``{version, op, files, schema, spec, stats, txns}``. Only this metadata
+passes through the driver — data moves executor-side in ordinary
+parquet jobs that keep predicate pushdown and column pruning.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import time
 import urllib.parse
 import uuid
 
@@ -54,8 +59,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_COMMITS = "_commits"
+_LOG = "_delta_log"
 _DATA = "data"
+_CHECKPOINT = ".checkpoint.parquet"
+_PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
 
 
 def _stat_value(v):
@@ -69,6 +76,41 @@ def _stat_value(v):
     return iso() if iso else str(v)
 
 
+def _schema_json(schema: T.StructType) -> str:
+    """A frame's schema as the table's ``schemaString``, normalized to
+    what an explicit-schema parquet read returns: every field, array
+    element and map value nullable, no field metadata."""
+    fixed = {"nullable": True, "containsNull": True, "valueContainsNull": True,
+             "metadata": {}}
+
+    def norm(node):
+        if isinstance(node, list):
+            return [norm(v) for v in node]
+        if not isinstance(node, dict):
+            return node
+        return {k: fixed[k] if k in fixed else norm(v) for k, v in node.items()}
+
+    return json.dumps(norm(schema.jsonValue()), separators=(",", ":"), sort_keys=True)
+
+
+def _encode_path(entry: str) -> str:
+    """Manifest entry -> ``add``/``remove`` path: a percent-encoded
+    table-relative URI, or an absolute ``file://`` URI for the external
+    files a shallow clone references."""
+    if os.path.isabs(entry):
+        return "file://" + urllib.parse.quote(entry)
+    return urllib.parse.quote(entry)
+
+
+def _decode_path(path: str) -> str:
+    if ":" not in path:  # relative: quote() always encodes ':'
+        return urllib.parse.unquote(path)
+    parsed = urllib.parse.urlparse(path)
+    if parsed.scheme != "file":
+        raise DeltaFormatError(f"unsupported file URI scheme in {path!r}")
+    return urllib.parse.unquote(parsed.path)
+
+
 class CommitConflict(RuntimeError):
     """Another writer committed the target version first."""
 
@@ -77,8 +119,15 @@ class ExpectationViolation(ValueError):
     """A CHECK-constraint expectation failed; the batch was rejected."""
 
 
+class DeltaFormatError(ValueError):
+    """The _delta_log is malformed, non-contiguous, or needs a reader
+    feature this implementation does not provide (reader v2+ features,
+    physical partition columns). Always raised loudly — a half-understood
+    table must never be silently half-read."""
+
+
 class AcidTable:
-    """Snapshot-isolated parquet table with an atomic commit log."""
+    """Snapshot-isolated parquet table with an atomic Delta commit log."""
 
     # Cap on the driver-side distinct partition-tuple collect in
     # overwrite_partitions — generous for any real date/symbol layout,
@@ -89,69 +138,337 @@ class AcidTable:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        os.makedirs(os.path.join(root, _COMMITS), exist_ok=True)
+        os.makedirs(os.path.join(root, _LOG), exist_ok=True)
         os.makedirs(os.path.join(root, _DATA), exist_ok=True)
 
     # ------------------------------------------------------------- log --
-    def _commit_path(self, version: int) -> str:
-        return os.path.join(self.root, _COMMITS, f"{version:08d}.json")
+    def _log_path(self, version: int, suffix: str = ".json") -> str:
+        return os.path.join(self.root, _LOG, f"{version:020d}{suffix}")
+
+    def _log_versions(self, suffix: str) -> list[int]:
+        """Versions with a fully-published ``<20 digits><suffix>`` log
+        file. Torn or foreign files (temp names from crashed publishers)
+        never match, so they are never taken for committed versions."""
+        n = 20 + len(suffix)
+        return [
+            int(f[:20])
+            for f in os.listdir(os.path.join(self.root, _LOG))
+            if len(f) == n and f.endswith(suffix) and f[:20].isdigit()
+        ]
 
     def latest_version(self) -> int | None:
-        """Highest committed version, or None for an empty log. Torn or
-        foreign files (temp names from crashed publishers) are ignored —
-        only fully-linked ``NNNNNNNN.json`` names count as committed."""
-        versions = [
-            int(f[:8])
-            for f in os.listdir(os.path.join(self.root, _COMMITS))
-            if len(f) == 13 and f.endswith(".json") and f[:8].isdigit()
-        ]
-        return max(versions) if versions else None
+        """Highest committed version, or None for an empty log."""
+        return max(self._log_versions(".json"), default=None)
 
-    def _manifest(self, version: int) -> dict:
-        with open(self._commit_path(version)) as fh:
-            return json.load(fh)
+    def _replay(self, upto: int, from_checkpoint: bool = True):
+        """THE log decoder: one forward pass applying each version's
+        actions in order, yielding ``(version, commitInfo, live, meta,
+        txns)`` after each (``live`` maps manifest entry -> add action;
+        the dicts are updated in place). Starts from the newest
+        checkpoint ≤ ``upto``; re-applying the checkpoint version's own
+        commit to its checkpointed state is a no-op, so that commit is
+        re-read only when ``upto`` is the checkpoint (for its
+        commitInfo). Missing versions, unknown actions and unsupported
+        features raise ``DeltaFormatError``."""
+        live: dict[str, dict] = {}
+        txns: dict[str, int] = {}
+        meta: dict | None = None
+        start = 0
+        cps = [
+            v for v in self._log_versions(_CHECKPOINT) if v <= upto
+        ] if from_checkpoint else []
+        if cps:
+            import pyarrow.parquet as pq
+
+            cp = max(cps)
+            for row in pq.read_table(self._log_path(cp, _CHECKPOINT)).to_pylist():
+                action = {k: v for k, v in row.items() if v is not None}
+                meta = self._apply(action, live, txns, meta)
+            start = cp if cp == upto else cp + 1
+        for v in range(start, upto + 1):
+            info: dict = {}
+            try:
+                fh = open(self._log_path(v))
+            except FileNotFoundError as ex:
+                raise DeltaFormatError(
+                    f"non-contiguous _delta_log: version {v} missing "
+                    f"(reading {upto}) in {self.root}"
+                ) from ex
+            with fh:
+                for line in fh:
+                    if not line.strip():
+                        continue
+                    action = json.loads(line)
+                    if "commitInfo" in action:
+                        info = action["commitInfo"]
+                    else:
+                        meta = self._apply(action, live, txns, meta)
+            if meta is None:
+                raise DeltaFormatError(
+                    f"no metaData action by version {v} in {self.root}"
+                )
+            yield v, info, live, meta, txns
+
+    @staticmethod
+    def _apply(action: dict, live: dict, txns: dict, meta: dict | None):
+        """Apply one non-commitInfo action to the replay state; returns
+        the (possibly replaced) metaData."""
+        (kind, body), = action.items()
+        if kind == "add":
+            live[_decode_path(body["path"])] = body
+        elif kind == "remove":
+            live.pop(_decode_path(body["path"]), None)
+        elif kind == "txn":
+            txns[body["appId"]] = max(txns.get(body["appId"], -1), body["version"])
+        elif kind == "metaData":
+            if body.get("partitionColumns"):
+                raise DeltaFormatError(
+                    f"physical partition columns {body['partitionColumns']} "
+                    "are not supported (partition specs here are ordinary "
+                    "data columns)"
+                )
+            return body
+        elif kind == "protocol":
+            if body.get("minReaderVersion", 1) > _PROTOCOL["minReaderVersion"]:
+                raise DeltaFormatError(
+                    "table requires delta reader version "
+                    f"{body['minReaderVersion']}; this implementation is "
+                    f"reader v{_PROTOCOL['minReaderVersion']} (no deletion "
+                    "vectors / column mapping)"
+                )
+        else:
+            raise DeltaFormatError(f"unknown delta action {kind!r}")
+        return meta
+
+    @staticmethod
+    def _decode(version, info, live, meta, txns) -> dict:
+        """Replay state -> the manifest every op works on. ``schema`` is
+        the metaData ``schemaString``; ``stats`` maps files with min/max
+        to ``{col: [min, max]}``."""
+        spec = (info.get("operationParameters") or {}).get("partitionBy")
+        stats = {}
+        for entry, add in live.items():
+            if "minValues" not in (add.get("stats") or ""):
+                continue
+            s = json.loads(add["stats"])
+            if s["minValues"]:
+                stats[entry] = {
+                    c: [lo, s["maxValues"].get(c)]
+                    for c, lo in s["minValues"].items()
+                }
+        return {
+            "version": version,
+            "op": info.get("operation", "write").lower(),
+            "files": sorted(live),
+            "schema": meta["schemaString"],
+            "spec": None if spec is None else json.loads(spec),
+            "stats": stats,
+            "txns": dict(txns),
+        }
+
+    def _state(self, version: int | None = None) -> tuple:
+        """Replay state at ``version`` (default: the latest), i.e. the
+        last ``_replay`` step."""
+        if version is None:
+            version = self.latest_version()
+            if version is None:
+                raise FileNotFoundError(f"no committed version in {self.root}")
+        for state in self._replay(version):
+            pass
+        return state
+
+    def _manifest(self, version: int | None = None) -> dict:
+        """Decoded snapshot at ``version`` (default: the latest)."""
+        return self._decode(*self._state(version))
 
     def history(self) -> list[dict]:
-        """All committed manifests, oldest first (op metadata audit)."""
+        """Every version's manifest, oldest first (op metadata audit) —
+        one forward pass over the whole log."""
         latest = self.latest_version()
         if latest is None:
             return []
-        return [self._manifest(v) for v in range(latest + 1)]
+        return [
+            self._decode(*state)
+            for state in self._replay(latest, from_checkpoint=False)
+        ]
 
     def _try_commit(
         self,
         version: int,
         op: str,
         files: list[str],
-        schema_ddl: str,
+        schema: str,
         spec: list[str] | None = None,
         stats: dict | None = None,
+        txn: tuple[str, int] | None = None,
     ) -> None:
-        """Atomically publish ``version``; raise CommitConflict if lost."""
-        manifest = {
-            "version": version,
-            "op": op,
-            "files": sorted(files),
-            "schema": schema_ddl,
-            "parent": version - 1 if version else None,
-        }
-        if spec is not None:
-            manifest["spec"] = spec
-        if stats is not None:
-            manifest["stats"] = stats
-        tmp = self._commit_path(version) + f".tmp-{uuid.uuid4().hex[:8]}"
+        """Atomically publish ``version`` — live set ``files`` encoded as
+        the add/remove diff against the parent snapshot; raise
+        CommitConflict if another writer published it first."""
+        import pyarrow.parquet as pq
+
+        now = int(time.time() * 1000)
+        live, meta = {}, None
+        if version:
+            _v, _info, live, meta, _txns = self._state(version - 1)
+        params = {} if spec is None else {"partitionBy": json.dumps(list(spec))}
+        actions: list[dict] = [
+            {
+                "commitInfo": {
+                    "timestamp": now,
+                    "operation": op.upper(),
+                    "operationParameters": params,
+                    "engineInfo": "equity_volatility_lakehouse_platform_spark",
+                }
+            }
+        ]
+        if meta is None:
+            actions.append({"protocol": dict(_PROTOCOL)})
+        if meta is None or meta["schemaString"] != schema:
+            actions.append(
+                {
+                    "metaData": {
+                        "id": meta["id"] if meta else uuid.uuid4().hex,
+                        "format": {"provider": "parquet", "options": {}},
+                        "schemaString": schema,
+                        "partitionColumns": [],
+                        "configuration": {},
+                        "createdTime": meta.get("createdTime") if meta else now,
+                    }
+                }
+            )
+        if txn is not None:
+            actions.append(
+                {"txn": {"appId": txn[0], "version": int(txn[1]), "lastUpdated": now}}
+            )
+        new = set(files)
+        for entry in sorted(set(live) - new):
+            actions.append(
+                {
+                    "remove": {
+                        "path": _encode_path(entry),
+                        "deletionTimestamp": now,
+                        "dataChange": True,
+                    }
+                }
+            )
+        for entry in sorted(new - set(live)):
+            path = os.path.join(self.root, entry)
+            file_stats = {"numRecords": pq.read_metadata(path).num_rows}
+            minmax = (stats or {}).get(entry)
+            if minmax:
+                file_stats["minValues"] = {c: v[0] for c, v in minmax.items()}
+                file_stats["maxValues"] = {c: v[1] for c, v in minmax.items()}
+            st = os.stat(path)
+            actions.append(
+                {
+                    "add": {
+                        "path": _encode_path(entry),
+                        "partitionValues": {},
+                        "size": st.st_size,
+                        "modificationTime": int(st.st_mtime * 1000),
+                        "dataChange": True,
+                        "stats": json.dumps(file_stats),
+                    }
+                }
+            )
+        final = self._log_path(version)
+        tmp = final + f".tmp-{uuid.uuid4().hex[:8]}"
         with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
+            for action in actions:
+                fh.write(json.dumps(action) + "\n")
             fh.flush()
             os.fsync(fh.fileno())
         try:
             # Hardlink = atomic create-if-absent: exactly one writer can
             # publish each version (POSIX link(2) fails on existing dst).
-            os.link(tmp, self._commit_path(version))
+            os.link(tmp, final)
         except FileExistsError as ex:
             raise CommitConflict(f"version {version} already committed") from ex
         finally:
             os.unlink(tmp)
+
+    def checkpoint(self) -> int:
+        """Write the protocol's parquet checkpoint for the latest version
+        plus the ``_last_checkpoint`` pointer, so replay (ours and any
+        foreign reader's) reads O(commits since checkpoint) JSON files
+        instead of the whole log. Metadata-scale: one parquet row per
+        live file, written driver-side with pyarrow, never a Spark job.
+        ``txn`` watermarks are checkpointed (idempotent writers rely on
+        them after log cleanup)."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        latest, _info, live, meta, txns = self._state()
+        rows = [{"protocol": dict(_PROTOCOL)}, {"metaData": meta}]
+        rows += [{"txn": {"appId": a, "version": txns[a]}} for a in sorted(txns)]
+        rows += [{"add": live[e]} for e in sorted(live)]
+        smap = pa.map_(pa.string(), pa.string())
+        schema = pa.schema(
+            [
+                ("protocol", pa.struct(
+                    [("minReaderVersion", pa.int32()),
+                     ("minWriterVersion", pa.int32())])),
+                ("metaData", pa.struct(
+                    [("id", pa.string()),
+                     ("format", pa.struct(
+                         [("provider", pa.string()), ("options", smap)])),
+                     ("schemaString", pa.string()),
+                     ("partitionColumns", pa.list_(pa.string())),
+                     ("configuration", smap),
+                     ("createdTime", pa.int64())])),
+                ("add", pa.struct(
+                    [("path", pa.string()),
+                     ("partitionValues", smap),
+                     ("size", pa.int64()),
+                     ("modificationTime", pa.int64()),
+                     ("dataChange", pa.bool_()),
+                     ("stats", pa.string())])),
+                ("txn", pa.struct(
+                    [("appId", pa.string()),
+                     ("version", pa.int64())])),
+            ]
+        )
+        final = self._log_path(latest, _CHECKPOINT)
+        tmp = final + f".tmp-{uuid.uuid4().hex[:8]}"
+        pq.write_table(pa.Table.from_pylist(rows, schema=schema), tmp)
+        os.replace(tmp, final)
+        pointer = os.path.join(self.root, _LOG, "_last_checkpoint")
+        tmp = pointer + f".tmp-{uuid.uuid4().hex[:8]}"
+        with open(tmp, "w") as fh:
+            json.dump({"version": latest, "size": len(rows)}, fh)
+        os.replace(tmp, pointer)
+        return latest
+
+    # ------------------------------------------------- idempotent txns --
+    def txn_version(self, app_id: str) -> int | None:
+        """Latest committed transaction version for ``app_id`` (the
+        protocol's per-writer idempotence watermark), or None if the app
+        never wrote."""
+        latest = self.latest_version()
+        if latest is None:
+            return None
+        return self._state(latest)[4].get(app_id)
+
+    def append_txn(self, df: DataFrame, app_id: str, version: int) -> int | None:
+        """Exactly-once streaming append: the Delta protocol's
+        transaction-identifier recipe (PROTOCOL.md "Transaction
+        Identifiers" — what delta-spark's streaming sink does per
+        micro-batch). The commit carries ``txn {appId, version}``; a
+        REPLAYED batch (same app, version ≤ the table's watermark) is
+        skipped, so blind appends stay exactly-once under foreachBatch
+        retries without content keys or sink-side state. The watermark
+        is checked before the data write and again inside the commit
+        retry loop, so a concurrent writer landing the same batch first
+        also makes this call a no-op. Returns the committed version, or
+        None when the batch was already applied."""
+        last = self.txn_version(app_id)
+        if last is not None and version <= last:
+            return None
+        return self._commit_loop(
+            "append", df, lambda snap_files: snap_files, evolve=True,
+            txn=(app_id, version),
+        )
 
     # ------------------------------------------------------------ data --
     def _write_data(self, df: DataFrame) -> list[str]:
@@ -188,19 +505,25 @@ class AcidTable:
         by_rel: dict = {}
         for r in rows:
             fname = urllib.parse.unquote(r["_f"])
-            rel = next(
-                (f for f in rel_files if fname.endswith(f)), None
-            )
-            if rel is None:
-                continue
-            by_rel[rel] = {
-                c: [
-                    _stat_value(r[f"_min_{c}"]),
-                    _stat_value(r[f"_max_{c}"]),
-                ]
-                for c in stats_cols
-            }
+            rel = next((f for f in rel_files if fname.endswith(f)), None)
+            if rel is not None:
+                by_rel[rel] = {
+                    c: [_stat_value(r[f"_min_{c}"]), _stat_value(r[f"_max_{c}"])]
+                    for c in stats_cols
+                }
         return by_rel
+
+    def _scan(self, manifest: dict, files: list[str] | None = None) -> DataFrame:
+        """Scan ``files`` (default: all of ``manifest``'s) with the
+        manifest's explicit schema — no footer-merging inference over N
+        files; missing columns read as NULL. No files: an empty frame."""
+        schema = T.StructType.fromJson(json.loads(manifest["schema"]))
+        files = manifest["files"] if files is None else files
+        if not files:
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(
+            *[os.path.join(self.root, f) for f in files]
+        )
 
     # ------------------------------------------------------------ read --
     def prune_files(
@@ -213,11 +536,8 @@ class AcidTable:
         point at 100 TB: a z-ordered table answers a band probe from
         the manifest in O(files) driver work, zero I/O. Returns
         (surviving files, total files)."""
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version in {self.root}")
-        manifest = self._manifest(latest if version is None else version)
-        stats = manifest.get("stats", {})
+        manifest = self._manifest(version)
+        stats = manifest["stats"]
         lo_c, hi_c = _stat_value(lo), _stat_value(hi)
         keep = []
         for f in manifest["files"]:
@@ -245,36 +565,16 @@ class AcidTable:
         surviving file still filter). Identical results to a full-scan
         filter by construction — the skipped files provably contain no
         matching row."""
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version in {self.root}")
-        v = latest if version is None else version
-        keep, _total = self.prune_files(col, lo, hi, v)
-        schema = T._parse_datatype_string(self._manifest(v)["schema"])
-        if not keep:
-            return self.spark.createDataFrame([], schema)
-        paths = [os.path.join(self.root, f) for f in keep]
-        return (
-            self.spark.read.schema(schema)
-            .parquet(*paths)
-            .filter((F.col(col) >= lo) & (F.col(col) <= hi))
+        manifest = self._manifest(version)
+        keep, _total = self.prune_files(col, lo, hi, manifest["version"])
+        return self._scan(manifest, keep).filter(
+            (F.col(col) >= lo) & (F.col(col) <= hi)
         )
 
     def read(self, version: int | None = None) -> DataFrame:
         """Snapshot read (time travel via ``version``). Only files listed
         in that version's manifest are scanned."""
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version in {self.root}")
-        if version is None:
-            version = latest
-        manifest = self._manifest(version)
-        schema = T._parse_datatype_string(manifest["schema"])
-        if not manifest["files"]:
-            return self.spark.createDataFrame([], schema)
-        paths = [os.path.join(self.root, f) for f in manifest["files"]]
-        # Explicit schema: skips footer-merging inference over N files.
-        return self.spark.read.schema(schema).parquet(*paths)
+        return self._scan(self._manifest(version))
 
     def changes(self, v_from: int, v_to: int) -> DataFrame:
         """Row-level change feed between two committed snapshots (the
@@ -300,16 +600,7 @@ class AcidTable:
         mf_from, mf_to = self._manifest(v_from), self._manifest(v_to)
         added = sorted(set(mf_to["files"]) - set(mf_from["files"]))
         removed = sorted(set(mf_from["files"]) - set(mf_to["files"]))
-        schema = T._parse_datatype_string(mf_to["schema"])
-
-        def _scan(files: list[str]) -> DataFrame:
-            if not files:
-                return self.spark.createDataFrame([], schema)
-            return self.spark.read.schema(schema).parquet(
-                *[os.path.join(self.root, f) for f in files]
-            )
-
-        added_df, removed_df = _scan(added), _scan(removed)
+        added_df, removed_df = self._scan(mf_to, added), self._scan(mf_to, removed)
         inserts = added_df.exceptAll(removed_df).withColumn(
             "_change_type", F.lit("insert")
         )
@@ -330,7 +621,7 @@ class AcidTable:
     ) -> int:
         """Atomic append (blind insert; never conflicts logically, only
         on version numbers — retried). New columns in ``df`` evolve the
-        table schema additively (see ``_evolved_schema_ddl``).
+        table schema additively (see ``_evolved_schema``).
 
         ``expectations`` are CHECK constraints (the Delta constraints
         analogue): named boolean Columns every batch row must satisfy.
@@ -370,16 +661,16 @@ class AcidTable:
             "append", df, lambda snap_files: snap_files, evolve=True
         )
 
-    def _evolved_schema_ddl(self, df: DataFrame, latest: int | None) -> str:
+    def _evolved_schema(self, df: DataFrame, manifest: dict | None) -> str:
         """ADD-COLUMN schema evolution: the committed schema is the
         current snapshot's fields followed by the batch's new fields.
         Earlier files simply lack the new columns — the explicit-schema
         snapshot read fills them with NULL, so no rewrite ever happens
         (the Delta/Iceberg mergeSchema contract). Changing an EXISTING
         column's type is refused loudly — evolution only widens."""
-        if latest is None:
-            return df.schema.simpleString()[7:-1]  # strip struct<...>
-        old = T._parse_datatype_string(self._manifest(latest)["schema"])
+        if manifest is None:
+            return _schema_json(df.schema)
+        old = T.StructType.fromJson(json.loads(manifest["schema"]))
         by_name = {f.name: f for f in old.fields}
         for f in df.schema.fields:
             have = by_name.get(f.name)
@@ -393,23 +684,33 @@ class AcidTable:
             list(old.fields)
             + [f for f in df.schema.fields if f.name not in by_name]
         )
-        return merged.simpleString()[7:-1]
+        return _schema_json(merged)
 
     def _commit_loop(
-        self, op, df, keep_fn, max_retries: int = 10, evolve: bool = False
-    ) -> int:
+        self, op, df, keep_fn, max_retries: int = 10, evolve: bool = False,
+        spec: list[str] | None = None, txn: tuple[str, int] | None = None,
+    ) -> int | None:
         files = self._write_data(df)
         for _ in range(max_retries):
             latest = self.latest_version()
-            base = [] if latest is None else self._manifest(latest)["files"]
+            manifest = None if latest is None else self._manifest(latest)
+            if txn is not None and manifest is not None and (
+                manifest["txns"].get(txn[0], -1) >= txn[1]
+            ):
+                self._unlink_files(files)
+                return None  # a concurrent writer landed this batch first
+            base = [] if manifest is None else manifest["files"]
             version = 0 if latest is None else latest + 1
-            schema_ddl = (
-                self._evolved_schema_ddl(df, latest)
+            schema = (
+                self._evolved_schema(df, manifest)
                 if evolve
-                else df.schema.simpleString()[7:-1]
+                else _schema_json(df.schema)
             )
             try:
-                self._try_commit(version, op, keep_fn(base) + files, schema_ddl)
+                self._try_commit(
+                    version, op, keep_fn(base) + files, schema,
+                    spec=spec, txn=txn,
+                )
                 return version
             except CommitConflict:
                 continue  # data files are reusable; only the log moved
@@ -429,30 +730,29 @@ class AcidTable:
         .save_model) and anything else that must read-then-append in
         one serializable step; keeps callers off the private
         _write_data/_manifest/_try_commit internals."""
+        return self._recompute_loop("append", build_df, max_retries)
+
+    def _recompute_loop(self, op: str, build_df, max_retries: int) -> int:
         for _ in range(max_retries):
             latest = self.latest_version()
             if latest is None:
                 snap, base, schema = None, [], None
             else:
                 manifest = self._manifest(latest)
-                snap = self.read(latest)
+                snap = self._scan(manifest)
                 base, schema = manifest["files"], manifest["schema"]
             df = build_df(snap)
             if schema is None:
-                schema = df.schema.simpleString()[7:-1]
+                schema = _schema_json(df.schema)
             files = self._write_data(df)
+            version = 0 if latest is None else latest + 1
             try:
-                self._try_commit(
-                    0 if latest is None else latest + 1,
-                    "append", base + files, schema,
-                )
-                return 0 if latest is None else latest + 1
+                self._try_commit(version, op, base + files, schema)
+                return version
             except CommitConflict:
                 self._unlink_files(files)
                 continue  # rebuild against the winner's snapshot
-        raise CommitConflict(
-            f"lost {max_retries} commit races on {self.root}"
-        )
+        raise CommitConflict(f"lost {max_retries} {op} races on {self.root}")
 
     def _unlink_files(self, rel_files: list[str]) -> None:
         """Best-effort removal of data files a losing commit attempt
@@ -473,33 +773,14 @@ class AcidTable:
         old+new atomically. On a lost race the anti-join re-runs against
         the WINNER's snapshot — the recheck that makes concurrent
         insert-only merges serializable (no duplicate keys, ever)."""
-        for _ in range(max_retries):
-            latest = self.latest_version()
-            if latest is None:
-                try:
-                    return self._commit_loop("merge", updates, lambda b: b, 1)
-                except CommitConflict:
-                    continue
-            snapshot = self._manifest(latest)
-            existing_keys = self.read(latest).select(*keys)
-            # Column-pruned existing side; anti-join broadcasts the small
-            # side under AQE — same shape as the non-ACID upsert path.
-            new_rows = updates.join(existing_keys, keys, "left_anti")
-            files = self._write_data(new_rows)
-            try:
-                self._try_commit(
-                    latest + 1,
-                    "merge",
-                    snapshot["files"] + files,
-                    snapshot["schema"],
-                )
-                return latest + 1
-            except CommitConflict:
-                # recompute against the new snapshot; drop the loser's
-                # files (the anti-join result is snapshot-dependent)
-                self._unlink_files(files)
-                continue
-        raise CommitConflict(f"lost {max_retries} merge races on {self.root}")
+        # Column-pruned existing side; the anti-join broadcasts the small
+        # side under AQE — same shape as the non-ACID upsert path.
+        return self._recompute_loop(
+            "merge",
+            lambda snap: updates if snap is None
+            else updates.join(snap.select(*keys), keys, "left_anti"),
+            max_retries,
+        )
 
     def merge_upsert(
         self, updates: DataFrame, keys: list[str], max_retries: int = 5
@@ -556,7 +837,18 @@ class AcidTable:
         table schema (Debezium's op='d', Delta CDF's _change_type).
         Flagged rows delete their matched targets; the flag column is
         dropped before the landing write and excluded from the schema
-        check. Mutually exclusive with ``delete_condition``."""
+        check. Mutually exclusive with ``delete_condition``.
+
+        Memory bound: the source's distinct key set (one row per
+        distinct source key, plus its count) is materialized by an
+        eager ``localCheckpoint`` and shared by the duplicate gate, the
+        file probe and the survivor anti-join. It is pinned in executor
+        block storage for the life of the call, so a MERGE needs
+        executor memory/disk for that key set on top of its jobs; and
+        being a LOCAL checkpoint it is not recomputable — if an
+        executor holding its blocks is lost, the MERGE fails instead of
+        recomputing, and the caller re-runs it (no version was
+        committed, so the retry is safe)."""
         if tombstone_col is not None:
             if delete_condition is not None:
                 raise ValueError(
@@ -580,12 +872,10 @@ class AcidTable:
             schema_src = updates.drop(tombstone_col)
         else:
             schema_src = updates
-        # ONE keys-only pass over the source batch (round 15, guide
-        # §2.1): the key aggregate is pinned executor-side so the dup
-        # gate, the copy-on-write file probe, and the survivor
-        # anti-join all consume the SAME materialized key set instead
-        # of each re-scanning the source. Runs BEFORE any data file is
-        # written — the fail-before-any-file-lands contract holds.
+        # ONE keys-only pass over the source batch: the key aggregate is
+        # pinned executor-side (memory bound in the docstring) so the dup
+        # gate, the file probe and the survivor anti-join all consume the
+        # SAME key set. Runs BEFORE any data file is written.
         key_counts = (
             updates.select(*keys)
             .groupBy(*keys)
@@ -600,16 +890,15 @@ class AcidTable:
                 "matched-row update image would be nondeterministic"
             )
         key_df = key_counts.drop("_n")
-        for _ in range(max_retries):
-            latest = self.latest_version()
-            if latest is None:
-                try:
-                    return self._commit_loop(_op, landing, lambda b: b, 1)
-                except CommitConflict:
-                    continue
-            manifest = self._manifest(latest)
-            schema = T._parse_datatype_string(manifest["schema"])
-            table_fields = {f.name: f.dataType for f in schema.fields}
+        if self.latest_version() is None:
+            try:
+                return self._commit_loop(_op, landing, lambda b: b, 1)
+            except CommitConflict:
+                pass  # a rival created the table: merge into its snapshot
+
+        def matched_files(manifest: dict) -> set[str]:
+            table = self._scan(manifest)
+            table_fields = {f.name: f.dataType for f in table.schema.fields}
             batch_fields = {
                 f.name: f.dataType for f in schema_src.schema.fields
             }
@@ -627,54 +916,21 @@ class AcidTable:
                     f"retyped={retyped}) — merge does no implicit "
                     "evolution; use append for schema-widening loads"
                 )
-            affected: set[str] = set()
-            if manifest["files"]:
-                paths = [os.path.join(self.root, f) for f in manifest["files"]]
-                hit = (
-                    self.spark.read.schema(schema)
-                    .parquet(*paths)
-                    .select(*keys, F.input_file_name().alias("f"))
-                    .join(key_df, keys, "left_semi")
-                    .select("f")
-                    .distinct()
-                    .collect()
-                )
-                affected = self._resolve_hits(manifest, hit)
-            kept = [f for f in manifest["files"] if f not in affected]
-            new_files: list[str] = []
-            if affected:
-                apaths = [os.path.join(self.root, f) for f in sorted(affected)]
-                survivors = (
-                    self.spark.read.schema(schema)
-                    .parquet(*apaths)
-                    .join(key_df, keys, "left_anti")
-                )
-                # The survivor rewrite and the landing write are
-                # INDEPENDENT jobs into separate immutable dirs —
-                # submit both so the second back-fills the first's
-                # straggler tail (guide §2.6); the commit below still
-                # waits for both, so atomicity is unchanged and a
-                # failure of either aborts before any manifest lands.
-                from concurrent.futures import ThreadPoolExecutor
+            if not manifest["files"]:
+                return set()
+            hit = (
+                table.select(*keys, F.input_file_name().alias("f"))
+                .join(key_df, keys, "left_semi")
+                .select("f")
+                .distinct()
+                .collect()
+            )
+            return self._resolve_hits(manifest, hit)
 
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    fut_s = pool.submit(self._write_data, survivors)
-                    fut_l = pool.submit(self._write_data, landing)
-                    new_files += fut_s.result()
-                    new_files += fut_l.result()
-            else:
-                new_files += self._write_data(landing)
-            try:
-                self._try_commit(
-                    latest + 1,
-                    _op,
-                    kept + new_files,
-                    manifest["schema"],
-                )
-                return latest + 1
-            except CommitConflict:
-                continue  # recompute the affected set against the winner
-        raise CommitConflict(f"lost {max_retries} {_op} races on {self.root}")
+        return self._rewrite(
+            _op, matched_files, lambda old: old.join(key_df, keys, "left_anti"),
+            max_retries, landing=landing,
+        )
 
     # ----------------------------------------------- copy-on-write DML --
     def _probe(self, manifest: dict, condition: Column) -> DataFrame:
@@ -682,11 +938,8 @@ class AcidTable:
         projection pruned to the predicate columns + file name (verified
         by tests/test_acid.py — at 100 TB this reads one column with
         row-group skipping, not the table)."""
-        schema = T._parse_datatype_string(manifest["schema"])
-        paths = [os.path.join(self.root, f) for f in manifest["files"]]
         return (
-            self.spark.read.schema(schema)
-            .parquet(*paths)
+            self._scan(manifest)
             .filter(condition)
             .select(F.input_file_name().alias("f"))
             .distinct()
@@ -708,7 +961,12 @@ class AcidTable:
                 urllib.parse.unquote(urllib.parse.urlparse(row.f).path)
             )
             entry = by_abs.get(p)
-            assert entry is not None, (p, sorted(by_abs)[:3])
+            if entry is None:
+                raise RuntimeError(
+                    f"copy-on-write probe hit {p}, which is not a live file "
+                    f"of the snapshot (e.g. {sorted(by_abs)[:3]}) — refusing "
+                    "to compute a rewrite set that would drop it"
+                )
             entries.add(entry)
         return entries
 
@@ -723,26 +981,39 @@ class AcidTable:
         )
 
     def _rewrite(
-        self, op: str, condition: Column, transform, max_retries: int = 5
+        self, op: str, find_affected, transform, max_retries: int = 5,
+        landing: DataFrame | None = None,
     ) -> int:
-        """Shared copy-on-write loop for DELETE/UPDATE: rewrite ONLY the
-        files containing matches, keep every other file by reference."""
+        """Shared copy-on-write loop for DELETE/UPDATE/MERGE/partition
+        overwrite: ``find_affected(manifest)`` picks the files holding
+        matches, ONLY those are rewritten (``transform`` maps their scan
+        to the rows they keep), every other file carries over by
+        reference, and the ``landing`` rows are written and published in
+        the same commit. A lost race recomputes against the winner's
+        snapshot."""
         for _ in range(max_retries):
-            latest = self.latest_version()
-            if latest is None:
-                raise FileNotFoundError(f"no committed version in {self.root}")
-            manifest = self._manifest(latest)
-            affected = self._affected_files(manifest, condition)
+            manifest = self._manifest()
+            latest = manifest["version"]
+            affected = find_affected(manifest)
             kept = [f for f in manifest["files"] if f not in affected]
-            new_files: list[str] = []
+            jobs = [] if landing is None else [landing]
             if affected:
-                schema = T._parse_datatype_string(manifest["schema"])
-                paths = [os.path.join(self.root, f) for f in sorted(affected)]
-                rewritten = transform(self.spark.read.schema(schema).parquet(*paths))
-                new_files = self._write_data(rewritten)
+                jobs.insert(0, transform(self._scan(manifest, sorted(affected))))
+            if len(jobs) == 2:
+                # The rewrite and the landing write are INDEPENDENT jobs
+                # into separate immutable dirs — submit both so the
+                # second back-fills the first's straggler tail; the
+                # commit still waits for both, so atomicity is unchanged
+                # and a failure of either aborts before any commit lands.
+                from concurrent.futures import ThreadPoolExecutor
+
+                with ThreadPoolExecutor(max_workers=2) as pool:
+                    written = [f for fs in pool.map(self._write_data, jobs) for f in fs]
+            else:
+                written = [f for df in jobs for f in self._write_data(df)]
             try:
                 self._try_commit(
-                    latest + 1, op, kept + new_files, manifest["schema"]
+                    latest + 1, op, kept + written, manifest["schema"]
                 )
                 return latest + 1
             except CommitConflict:
@@ -792,38 +1063,23 @@ class AcidTable:
                     eq = F.col(c) == F.lit(v)
                     clause = eq if clause is None else (clause & eq)
                 cond = clause if cond is None else (cond | clause)
-        new_files = self._write_data(df)
-        for _ in range(5):
-            latest = self.latest_version()
-            if latest is None:
-                raise FileNotFoundError(f"no committed version in {self.root}")
-            manifest = self._manifest(latest)
-            affected = self._affected_files(manifest, cond)
-            kept = [f for f in manifest["files"] if f not in affected]
-            rewritten: list[str] = []
-            if affected:
-                schema = T._parse_datatype_string(manifest["schema"])
-                paths = [os.path.join(self.root, f) for f in sorted(affected)]
-                survivors = self.spark.read.schema(schema).parquet(*paths).filter(~cond)
-                rewritten = self._write_data(survivors)
-            try:
-                self._try_commit(
-                    latest + 1,
-                    "overwrite_partitions",
-                    kept + rewritten + new_files,
-                    manifest["schema"],
-                )
-                return latest + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"lost 5 overwrite_partitions races on {self.root}")
+        return self._rewrite(
+            "overwrite_partitions",
+            lambda manifest: self._affected_files(manifest, cond),
+            lambda old: old.filter(~cond),
+            landing=df,
+        )
 
     def delete_where(self, condition: Column) -> int:
         """Transactional DELETE (docx UPDATE/DELETE parity): copy-on-write
         at file granularity — untouched files carry over by reference,
         affected files are rewritten without the matching rows, and the
         swap is one atomic commit (old versions stay time-travelable)."""
-        return self._rewrite("delete", condition, lambda df: df.filter(~condition))
+        return self._rewrite(
+            "delete",
+            lambda manifest: self._affected_files(manifest, condition),
+            lambda df: df.filter(~condition),
+        )
 
     def update_where(self, condition: Column, assignments: dict[str, Column]) -> int:
         """Transactional UPDATE ... SET (docx parity): rows matching
@@ -841,7 +1097,11 @@ class AcidTable:
                 ]
             )
 
-        return self._rewrite("update", condition, transform)
+        return self._rewrite(
+            "update",
+            lambda manifest: self._affected_files(manifest, condition),
+            transform,
+        )
 
     def append_partitioned(
         self, df: DataFrame, partition_cols: list[str], max_retries: int = 5
@@ -859,26 +1119,10 @@ class AcidTable:
         the new way, and every reader sees the union — exactly the
         Iceberg evolution contract. ``history()`` shows the spec per
         commit for audit."""
-        latest = self.latest_version()
         clustered = df.repartition(*[F.col(c) for c in partition_cols])
-        for _ in range(max_retries):
-            latest = self.latest_version()
-            base = -1 if latest is None else latest
-            files: list[str] = (
-                [] if latest is None else list(self._manifest(latest)["files"])
-            )
-            schema_ddl = self._evolved_schema_ddl(clustered, latest)
-            new_files = self._write_data(clustered)
-            try:
-                self._try_commit(
-                    base + 1, "append", files + new_files, schema_ddl,
-                    spec=list(partition_cols),
-                )
-                return base + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"lost {max_retries} append_partitioned races on {self.root}"
+        return self._commit_loop(
+            "append", clustered, lambda snap_files: snap_files, max_retries,
+            evolve=True, spec=list(partition_cols),
         )
 
     # ------------------------------------------------------- maintenance --
@@ -889,10 +1133,8 @@ class AcidTable:
         no shuffle); prior versions still reference the old files until
         ``vacuum()`` after they expire. The small-files problem is the
         classic failure mode of frequent small MERGEs at scale."""
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version in {self.root}")
-        manifest = self._manifest(latest)
+        manifest = self._manifest()
+        latest = manifest["version"]
         files = self._write_data(self.read(latest).coalesce(target_files))
         # No blind retry here: compacting a STALE snapshot would drop a
         # concurrent writer's rows. On conflict the caller re-invokes
@@ -912,7 +1154,7 @@ class AcidTable:
 
         Distributed end to end: each column maps to a ``bits``-bit rank
         via its approx-quantile boundaries (one agg pass; the 2^bits-1
-        boundary array broadcasts and ranks via a JVM array fold), the
+        boundary array broadcasts; ranks run in one Arrow pass), the
         per-column ranks bit-INTERLEAVE into the Morton z-key, and one
         ``repartitionByRange`` on the z-key (sorted within partitions)
         writes ``target_files`` files each owning a contiguous z-range.
@@ -920,32 +1162,19 @@ class AcidTable:
         commit is empty, like ``compact``. Columns must be orderable by
         percentile (numeric/timestamp). Same no-blind-retry contract as
         ``compact``: on a commit race, CommitConflict propagates."""
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version in {self.root}")
-        manifest = self._manifest(latest)
+        manifest = self._manifest()
+        latest = manifest["version"]
         df = self.read(latest)
         out_cols = list(df.columns)
         fractions = [i / (1 << bits) for i in range(1, 1 << bits)]
-        # ONE aggregate computes every column's boundary array (round 14,
-        # optimization round — previously one agg job per column), and the
-        # per-row ranks run vectorized in a single Arrow pass:
-        # np.searchsorted(bounds, value, side="left") counts boundaries
-        # strictly below the value — integer-identical to the replaced
-        # interpreted aggregate fold acc + (value > b) over the sorted
-        # boundary array (Spark's NaN-greatest double ordering included:
-        # NaN ranks past every boundary on both paths). The fold ran
-        # INTERPRETED over (2^bits - 1) elements per column per row, and
-        # repartitionByRange evaluates its input twice (range sampling +
-        # the write), which measured ~6 s of snk10's zorder at sf0.1.
-        # Z-order columns are expected non-null (they must be orderable
-        # by percentile); NULLs in float columns are indistinguishable
-        # from NaN post-Arrow and would rank high where the old fold
-        # ranked them 0.
-        # Timestamp columns rank through unix_micros — a strictly
-        # monotone bijection, so the quantile sketch selects the same
-        # boundary elements and every per-row rank is unchanged — and
-        # only PRIMITIVE types cross the Arrow boundary.
+        # ONE aggregate computes every column's boundary array; the
+        # per-row ranks run vectorized in a single Arrow pass, where
+        # np.searchsorted(bounds, value, side="left") counts the
+        # boundaries strictly below the value (NaN ranks past every
+        # boundary, as in Spark's NaN-greatest ordering). Z-order columns
+        # are expected non-null: a NULL float is NaN after Arrow.
+        # Timestamps rank through unix_micros (strictly monotone, so the
+        # ranks are unchanged) so only primitive types cross Arrow.
         def _zval(c: str) -> Column:
             if isinstance(df.schema[c].dataType, T.TimestampType):
                 return F.unix_micros(F.col(c))
@@ -1010,11 +1239,8 @@ class AcidTable:
             .select(*out_cols)
         )
         files = self._write_data(ordered)
-        # ZORDER's payoff is file skipping, so the rewrite commits WITH
-        # per-file min/max stats on the z-ordered columns — band probes
-        # then prune from the manifest alone (prune_files/read_range),
-        # zero data I/O, closing the file-skipping extension point the
-        # module docstring promises.
+        # ZORDER's payoff is file skipping: commit per-file min/max on
+        # the z-ordered columns so band probes prune from metadata alone.
         stats = self._file_stats(files, cols)
         self._try_commit(
             latest + 1, "zorder", files, manifest["schema"], stats=stats
@@ -1023,8 +1249,8 @@ class AcidTable:
 
     def clone(self, target_root: str) -> "AcidTable":
         """SHALLOW CLONE (Delta's ``CLONE``): a new INDEPENDENT table
-        whose version-0 manifest references the source's current data
-        files by ABSOLUTE path — zero bytes copied, O(1) metadata, the
+        whose version-0 commit adds the source's current data files by
+        absolute ``file://`` URI — zero bytes copied, O(1) metadata, the
         instant dev/test copy of a 100 TB table. The clone then evolves
         on its own:
 
@@ -1039,10 +1265,7 @@ class AcidTable:
         The source must not vacuum away files the clone still
         references — the same retention contract Delta documents for
         shallow clones."""
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version in {self.root}")
-        manifest = self._manifest(latest)
+        manifest = self._manifest()
         target = AcidTable(self.spark, target_root)
         abs_files = [
             os.path.abspath(os.path.join(self.root, f))
@@ -1064,9 +1287,7 @@ class AcidTable:
         Same no-blind-retry contract as ``compact``: restoring over a
         concurrent writer's unseen commit would silently drop it, so on
         a version race CommitConflict propagates to the caller."""
-        latest = self.latest_version()
-        if latest is None:
-            raise FileNotFoundError(f"no committed version in {self.root}")
+        latest = self._state()[0]
         manifest = self._manifest(version)
         self._try_commit(
             latest + 1, "restore", manifest["files"], manifest["schema"]
@@ -1099,8 +1320,6 @@ class AcidTable:
             live.update(manifest["files"])
         deleted = []
         data_root = os.path.join(self.root, _DATA)
-        if not os.path.isdir(data_root):
-            return deleted  # a fresh shallow clone owns no data yet
         for wdir in os.listdir(data_root):
             for f in os.listdir(os.path.join(data_root, wdir)):
                 rel = os.path.join(_DATA, wdir, f)

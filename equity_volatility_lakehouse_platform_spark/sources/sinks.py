@@ -6,8 +6,8 @@ The reference writes per-symbol CSVs with skip-if-exists memoization
 9/20), and SQLAlchemy ON CONFLICT DO NOTHING upserts (bars.py:196-198).
 Engine equivalents on plain parquet; for TRANSACTIONAL semantics
 (atomic MERGE, snapshot isolation, time travel) use
-``sources.acid.AcidTable`` — the commit-log table format this module's
-append-path helpers predate:
+``sources.acid.AcidTable`` — a Delta table (``_delta_log`` commit log)
+that this module's append-path helpers predate:
 
 * ``write_partitioned`` — symbol/date-partitioned parquet, snappy;
   idempotent dynamic partition overwrite (S7/S9/S10).

@@ -1246,28 +1246,24 @@ def run_cdc_apply_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def run_delta_txn_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming ingestion into the DELTA-FORMAT table with the
-    protocol's transaction-identifier idempotence (delta_compat
-    .append_txn) — the open-format twin of ``run_acid_ingest_stream``,
-    exercising the OTHER exactly-once mechanism: st12 dedups by content
-    key; here blind appends stay exactly-once because every micro-batch
-    commit carries ``txn {appId, version=batch_id}``.
+    """Streaming ingestion into an ``AcidTable`` with the Delta
+    protocol's transaction-identifier idempotence (``append_txn``) — the
+    twin of ``run_acid_ingest_stream`` exercising the OTHER exactly-once
+    mechanism: st12 dedups by content key; here blind appends stay
+    exactly-once because every micro-batch commit carries
+    ``txn {appId, version=batch_id}`` in the table's ``_delta_log``.
 
     The failure mode under test is the foreachBatch retry race: the
     sink committed batch 0 but the stream checkpoint did not advance,
     so on restart the SAME batch is delivered again. After the stream
-    completes, the test replays batch 0 by hand — ``append_txn`` must
+    completes, the runner replays batch 0 by hand — ``append_txn`` must
     skip it (version ≤ the table's txn watermark), so the snapshot
     holds each event exactly once and the oracle is simply the source.
-    A later batch (version advanced) still lands, proving the skip is
-    the watermark, not a closed table.
 
     Every artifact (landing dir, checkpoint, table root) is scoped to
     the call and deleted after the result detaches via localCheckpoint.
     """
-    from equity_volatility_lakehouse_platform_spark.sources.delta_compat import (
-        DeltaCompatTable,
-    )
+    from equity_volatility_lakehouse_platform_spark.sources.acid import AcidTable
 
     path = os.path.join(sf_dir, "events.parquet")
     if _nano_ts_columns(path):
@@ -1279,7 +1275,7 @@ def run_delta_txn_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_dir = os.path.join(tmp_root, "src")
     os.makedirs(src_dir)
     os.symlink(path, os.path.join(src_dir, "events_0.parquet"))
-    table = DeltaCompatTable(spark, os.path.join(tmp_root, "table"))
+    table = AcidTable(spark, os.path.join(tmp_root, "table"))
     app_id = "st23_delta_ingest"
     try:
         s = (

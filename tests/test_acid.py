@@ -65,7 +65,7 @@ def test_torn_commit_file_is_invisible(spark, orders, root):
     # taken for a committed version (only fully-linked NNNNNNNN.json are).
     t = AcidTable(spark, root)
     t.overwrite(orders.limit(100))
-    torn = os.path.join(root, "_commits", "00000001.json.tmp-deadbeef")
+    torn = os.path.join(root, "_delta_log", f"{1:020d}.json.tmp-deadbeef")
     with open(torn, "w") as fh:
         fh.write('{"version": 1, "files": [')  # truncated JSON
     assert t.latest_version() == 0
@@ -197,6 +197,21 @@ def test_affected_files_probe_pushes_down(spark, orders, root):
     assert m and "EqualTo(o_orderstatus,F)" in m.group(1), plan
     m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
     assert m and m.group(1) == "o_orderstatus:string", m.group(1) if m else plan
+
+
+def test_unresolvable_probe_hit_raises(spark, orders, root):
+    # A probe hit that names no live file means the rewrite set is wrong;
+    # it must raise a real error (not an assert, which `python -O` strips
+    # and would let the file silently drop out of the rewrite).
+    from pyspark.sql import Row
+
+    t = AcidTable(spark, root)
+    t.overwrite(orders.limit(10))
+    m = t._manifest(0)
+    live = [Row(f="file://" + os.path.join(root, f)) for f in m["files"]]
+    assert t._resolve_hits(m, live) == set(m["files"])
+    with pytest.raises(RuntimeError, match="not a live file"):
+        t._resolve_hits(m, live + [Row(f="file:///nowhere/part-0.parquet")])
 
 
 def test_overwrite_partitions_atomic(spark, sf_dir, root):

@@ -1182,20 +1182,20 @@ def test_sequential_feature_selection_forward_and_backward(spark):
     )
 )
 @PROP
-def test_delta_export_matches_acid_for_any_history(
+def test_delta_log_replay_matches_acid_for_any_history(
     spark, sf_dir, tmp_path_factory, ops
 ):
-    """export_acid is version-for-version lossless for ANY op sequence —
-    the randomized generalization of the fixed-history export test."""
+    """For ANY op sequence, a plain-json replay of the table's own
+    _delta_log, read by DuckDB, matches ``read(version=v)`` at every
+    version — the randomized generalization of the fixed-history
+    foreign-reader test."""
     from equity_volatility_lakehouse_platform_spark.sources.acid import (
         AcidTable,
-    )
-    from equity_volatility_lakehouse_platform_spark.sources.delta_compat import (
-        DeltaCompatTable,
     )
     from equity_volatility_lakehouse_platform_spark.sources.readers import (
         load_table,
     )
+    from tests.test_delta_compat import _foreign_rows
 
     base = str(tmp_path_factory.mktemp("delta_prop"))
     nation = load_table(spark, sf_dir, "nation")
@@ -1210,14 +1210,10 @@ def test_delta_export_matches_acid_for_any_history(
             acid.delete_where(F.col("n_nationkey") % 5 == k)
         else:
             acid.compact()
-    delta = DeltaCompatTable(spark, base + "/delta")
-    top = delta.export_acid(acid)
-    assert top == acid.latest_version()
-    for v in range(top + 1):
-        got = sorted(
-            map(tuple, delta.read(version=v).collect())
-        )
-        want = sorted(map(tuple, acid.read(version=v).collect()))
+    cols = nation.columns
+    for v in range(acid.latest_version() + 1):
+        got = _foreign_rows(acid.root, cols, v)
+        want = sorted(map(tuple, acid.read(version=v).select(*cols).collect()))
         assert got == want, f"version {v} diverged under {ops}"
 
 
